@@ -11,15 +11,21 @@ VERSION PIN: written and tested against PySpark 4.1.x (the container's
 baked-in build). Known 4.1-sensitive surfaces, each localized with a
 comment at the use site: the ``_jdf`` plan-stats reach-in
 (operators/neardup.py:_plan_size_bytes — guarded, safe fallback) and
-the ``PythonSQLUtils.explainString`` call in the plan tests/audit.
-Everything else is public DataFrame API.
+the ``PythonSQLUtils.explainString`` call in the plan tests/audit, and
+:func:`local_frame`'s reuse of ``pyspark.sql.types._make_type_verifier``
+and ``_create_converter`` (the row check and dict/Row/tuple → tuple
+step ``createDataFrame(rows, schema)`` runs) plus
+``pyspark.sql.pandas.types.to_arrow_schema``. Everything else is public
+DataFrame API.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Any, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _create_converter, _make_type_verifier
 
 
 def get_spark(
@@ -78,3 +84,40 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+) -> DataFrame:
+    """Driver-resident ``rows`` (dicts, tuples or ``Row``s) as a
+    DataFrame of ``schema`` (a ``StructType`` or DDL string) — the one
+    rows → DataFrame door of the package.
+
+    Every row first passes PySpark's own verifier, the check
+    ``createDataFrame(rows, schema)`` runs, so a value that call
+    rejects is still rejected (bare pyarrow is looser: it takes ``1.0``
+    for an int column and ``5`` for a double one). The rows then cross
+    to the JVM as one Arrow table and plan as a ``LocalTableScan``:
+    no Python worker runs to scan or broadcast it.
+    ``createDataFrame(list)`` instead pickles them into a Python RDD
+    (``Scan ExistingRDD``) whose every partition starts a Python
+    worker: ~0.17 s of executor time per partition on a 4-core host,
+    even for tens of rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    to_tuple = _create_converter(schema)
+    tuples = []
+    for row in rows:
+        verify(row)
+        tuples.append(to_tuple(row))
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*tuples) if tuples else ([] for _ in arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_frame
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as _vi
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     counting_state as _cs,
@@ -243,4 +244,4 @@ def catalog(spark: SparkSession, roots: dict[str, str] | list[str]) -> DataFrame
         catalog_entry(spark, name, path)
         for name, path in sorted(roots.items())
     ]
-    return spark.createDataFrame(entries, CATALOG_SCHEMA)
+    return local_frame(spark, entries, CATALOG_SCHEMA)

@@ -37,16 +37,19 @@ def write_atomic_csv(
     )
     out_dir = os.path.join(staging, "out")
     writer = df.coalesce(1) if single_file else df
-    # Empty-string-not-NULL convention of the reference CSVs (SURVEY §1.2):
-    # emptyValue/nullValue both write '' unquoted. escape='"' makes
-    # embedded quotes RFC4180 quote-DOUBLED ("" not \") — the dialect
-    # Postgres `COPY ... WITH (FORMAT csv, QUOTE '"')` and Python's csv
-    # module (the reference's writer) both speak; Spark's default
-    # backslash escape corrupts such values on the PG wire path.
-    writer.write.option("header", header).option("emptyValue", "").option(
-        "nullValue", ""
-    ).option("escape", '"').mode("overwrite").csv(out_dir)
+    # The write runs inside the try: a failed job must not leave the
+    # staging dir behind in dest's dir (for fetches, that is the inbox).
     try:
+        # Empty-string-not-NULL convention of the reference CSVs (SURVEY
+        # §1.2): emptyValue/nullValue both write '' unquoted. escape='"'
+        # makes embedded quotes RFC4180 quote-DOUBLED ("" not \") — the
+        # dialect Postgres `COPY ... WITH (FORMAT csv, QUOTE '"')` and
+        # Python's csv module (the reference's writer) both speak;
+        # Spark's default backslash escape corrupts such values on the
+        # PG wire path.
+        writer.write.option("header", header).option("emptyValue", "").option(
+            "nullValue", ""
+        ).option("escape", '"').mode("overwrite").csv(out_dir)
         if single_file:
             parts = sorted(glob.glob(os.path.join(out_dir, "part-*")))
             if len(parts) != 1:

@@ -15,13 +15,17 @@ Reference semantics re-expressed, not copied (Fetch_reddit.py:66-204):
   early-stopped at ``limit``.
 
 Connector design: the fetch is a DRIVER-SIDE edge concern — tens of rows
-per run (BASELINE.md) — materialized into a DataFrame with an explicit
-schema. Everything is dependency-injected (``transport``, ``sleep``,
-``clock``) so tests run hermetically on recorded payloads; the default
-transport is stdlib ``urllib`` (no extra deps). At real scale a
-partitioned fetch would shard cursor ranges over ``mapInPandas``; the
-listing API is inherently serial (an ``after`` cursor), so driver-side
-is the honest design.
+per run (BASELINE.md) — materialized with an explicit schema through
+:func:`...session.local_frame`: the rows pass PySpark's own type
+verifier, then cross to the JVM as one Arrow table that plans as a
+``LocalTableScan``, so writing the run's CSV starts no Python worker
+(``createDataFrame(list)`` pickled them into a Python RDD whose
+Python-worker partitions took most of a fetch's time). Everything is
+dependency-injected (``transport``, ``sleep``, ``clock``) so tests run
+hermetically on recorded payloads; the default transport is stdlib
+``urllib`` (no extra deps). At real scale a partitioned fetch would
+shard cursor ranges over ``mapInPandas``; the listing API is inherently
+serial (an ``after`` cursor), so driver-side is the honest design.
 """
 
 from __future__ import annotations
@@ -38,6 +42,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from reddit_apache_airflow_postgres_pipeline_spark.schemas import REDDIT_RAW
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_frame
 
 RETRYABLE_STATUS = {429, 403, 500, 502, 503, 504}
 MAX_ATTEMPTS = 8
@@ -218,7 +223,7 @@ def reddit_listing_df(
     spark: SparkSession, rows: list[dict[str, Any]]
 ) -> DataFrame:
     """Materialize fetched rows as the REDDIT_RAW relation."""
-    return spark.createDataFrame(rows, REDDIT_RAW)
+    return local_frame(spark, rows, REDDIT_RAW)
 
 
 def listing_json_df(spark: SparkSession, payloads: list[str | bytes]) -> DataFrame:
@@ -235,7 +240,8 @@ def listing_json_df(spark: SparkSession, payloads: list[str | bytes]) -> DataFra
 
     from reddit_apache_airflow_postgres_pipeline_spark.schemas import REDDIT_LISTING
 
-    raw = spark.createDataFrame(
+    raw = local_frame(
+        spark,
         [(p.decode() if isinstance(p, bytes) else p,) for p in payloads],
         "payload string",
     )

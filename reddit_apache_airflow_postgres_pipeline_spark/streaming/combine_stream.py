@@ -41,11 +41,13 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from reddit_apache_airflow_postgres_pipeline_spark.config import EngineConfig
 from reddit_apache_airflow_postgres_pipeline_spark.operators.merge import upsert_merge
 from reddit_apache_airflow_postgres_pipeline_spark.plans.pipelines import combine_pipeline
-from reddit_apache_airflow_postgres_pipeline_spark.schemas import DB_COLUMNS, UPSERT_UPDATE_COLUMNS
+from reddit_apache_airflow_postgres_pipeline_spark.schemas import FETCH_CSV, UPSERT_UPDATE_COLUMNS
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_frame
 from reddit_apache_airflow_postgres_pipeline_spark.sinks.archive import archive_files
 from reddit_apache_airflow_postgres_pipeline_spark.sources.files import (
     decoded_input_file,
@@ -63,22 +65,22 @@ class MemoryUpsertTarget:
     key: str = "thing_key"
     update_cols: list[str] = field(default_factory=lambda: list(UPSERT_UPDATE_COLUMNS))
     _rows: list = field(default_factory=list)
-    _columns: list = field(default_factory=lambda: list(DB_COLUMNS))
+    _schema: StructType = field(default_factory=lambda: FETCH_CSV)
 
     def merge(self, batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_df = batch_df.select(*self._columns)
+        batch_df = batch_df.select(*self._schema.names)
         if self._rows:
-            target = spark.createDataFrame(self._rows, self._columns)
-            merged = upsert_merge(target, batch_df, self.key, self.update_cols)
+            merged = upsert_merge(self.df(spark), batch_df, self.key, self.update_cols)
         else:
             merged = batch_df
         # The *target table* lives driver-side here only because this is
         # the test double; the production target is Postgres.
-        self._rows = [tuple(r[c] for c in self._columns) for r in merged.collect()]
+        self._schema = merged.schema
+        self._rows = merged.collect()
 
     def df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self._rows, self._columns)
+        return local_frame(spark, self._rows, self._schema)
 
 
 def start_combine_stream(

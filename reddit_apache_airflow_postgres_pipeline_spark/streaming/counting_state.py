@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_frame
+
 MANIFEST = "_subsumed.json"
 META = "_meta.json"
 
@@ -165,7 +167,7 @@ def read_counts(
             cell_schema + ", batch_id long"
         ).parquet(state_dir)
     except AnalysisException:
-        return spark.createDataFrame([], cell_schema)
+        return local_frame(spark, [], cell_schema)
     excluded = subsumed_ids(state_dir)
     if excluded:
         df = df.filter(~F.col("batch_id").isin([int(i) for i in excluded]))

@@ -42,6 +42,7 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
     minhash_band_keys,
     minhash_signature,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_frame
 
 _BK_SCHEMA = "doc long, bk string"
 
@@ -66,7 +67,7 @@ def _load_state(
             state_dir
         )
     except AnalysisException:
-        return spark.createDataFrame([], _BK_SCHEMA)
+        return local_frame(spark, [], _BK_SCHEMA)
     if before_batch is not None:
         df = df.filter(F.col("batch_id") < before_batch)
     return df.select("doc", "bk")
@@ -575,7 +576,7 @@ def _load_sig_state(
             _sig_schema(num_hashes) + ", batch_id long"
         ).parquet(state_dir)
     except AnalysisException:
-        return spark.createDataFrame([], _sig_schema(num_hashes))
+        return local_frame(spark, [], _sig_schema(num_hashes))
     if before_batch is not None:
         df = df.filter(F.col("batch_id") < before_batch)
     return df.drop("batch_id")

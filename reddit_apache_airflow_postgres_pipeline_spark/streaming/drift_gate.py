@@ -48,6 +48,7 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import (
     psi_drift_counts,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import token_count
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_frame
 
 _PSI_THRESHOLD = 0.25  # the "major drift" alerting line
 
@@ -260,7 +261,8 @@ def batch_drift_stats(
         ks_drift_counts,
     )
 
-    cur = batch_df.sparkSession.createDataFrame(
+    cur = local_frame(
+        batch_df.sparkSession,
         reference_counts(batch_df, text_col, bin_width, bins, metric).collect(),
         "bin int, n bigint",
     )
@@ -360,8 +362,8 @@ def run_drift_gate_available_now(
             )
             # batch_id lives in the partition dir name — readers of the
             # decisions log get it back as the inferred partition column
-            batch_df.sparkSession.createDataFrame(
-                decision, dschema
+            local_frame(
+                batch_df.sparkSession, decision, dschema
             ).write.mode("overwrite").parquet(
                 os.path.join(out_dir, "decisions", f"batch_id={batch_id}")
             )
@@ -535,7 +537,8 @@ def batch_group_drift_stats(
         psi_drift_counts_by_group,
     )
 
-    cur = batch_df.sparkSession.createDataFrame(
+    cur = local_frame(
+        batch_df.sparkSession,
         group_reference_counts(
             batch_df, group_col, text_col, bin_width, bins
         ).collect(),
@@ -667,8 +670,8 @@ def run_group_drift_gate_available_now(
             qua.write.mode("overwrite").parquet(
                 os.path.join(out_dir, "quarantined", f"batch_id={batch_id}")
             )
-            batch_df.sparkSession.createDataFrame(
-                decision, dschema
+            local_frame(
+                batch_df.sparkSession, decision, dschema
             ).write.mode("overwrite").parquet(
                 os.path.join(out_dir, "decisions", f"batch_id={batch_id}")
             )

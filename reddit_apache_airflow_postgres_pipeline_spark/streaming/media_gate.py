@@ -34,6 +34,7 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import a
 from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
     signature_band_keys,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_frame
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
     _BUCKETED_MARKER,
@@ -57,7 +58,7 @@ def _load_media_state(
             state_dir
         )
     except AnalysisException:
-        return spark.createDataFrame([], _SIG_SCHEMA)
+        return local_frame(spark, [], _SIG_SCHEMA)
     if before_batch is not None:
         df = df.filter(F.col("batch_id") < before_batch)
     return df.select("doc", "sig")

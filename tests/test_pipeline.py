@@ -343,3 +343,23 @@ def test_csv_quote_dialect_pg_and_python_csv_parity(spark, tmp_path):
     scan = read_csv_paths(spark, [gen])
     got = {r["id"]: r["title"] for r in scan.df.collect()}
     assert got == {str(i): v for i, v in enumerate(vals)}
+
+
+@pytest.mark.parametrize("single_file", [True, False])
+def test_atomic_csv_failed_write_leaves_no_staging_dir(spark, tmp_path, single_file):
+    """A write that fails while executing must leave nothing in dest's
+    dir — for fetches that dir is the combine inbox, and a leftover
+    ``.spark-csv-*`` staging dir would sit there for good."""
+    from pyspark.sql import functions as F
+
+    from reddit_apache_airflow_postgres_pipeline_spark.sinks.csv import write_atomic_csv
+
+    df = spark.range(4).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id").cast("string"))
+        .alias("v")
+    )
+    dest = str(tmp_path / "out.csv")
+    with pytest.raises(Exception, match="boom"):
+        write_atomic_csv(df, dest, single_file=single_file)
+    assert os.listdir(tmp_path) == []
