@@ -1341,6 +1341,9 @@ def _build_estate_into(
     from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
         counting_state as _cs,
     )
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
+        gate_core as _gc,
+    )
     from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
         _sig_schema,
         gate_batch_verified_attributed,
@@ -1383,13 +1386,7 @@ def _build_estate_into(
     # replay, persisted in the drain's own layout
     _cs.stamp_meta(
         roots["gate_state"],
-        {
-            "format": "verified-dedup-gate/v1",
-            "n": 3,
-            "num_hashes": 12,
-            "bands": 4,
-            "threshold": 0.5,
-        },
+        _gc.VERIFIED.meta(dict(n=3, num_hashes=12, bands=4, threshold=0.5)),
     )
     _cs.stamp_corpus_meta(roots["gate_corpus"], "doc_id", "text")
     sig_all = minhash_signature(docs, "doc_id", "text", 3, 12).localCheckpoint()
@@ -1428,8 +1425,7 @@ def _build_estate_into(
     )
 
     _cs.stamp_meta(
-        roots["media_gate_state"],
-        {"format": "media-gate/v1", "bits": 60, "max_hamming": 5},
+        roots["media_gate_state"], _gc.MEDIA.meta(dict(bits=60, max_hamming=5))
     )
     all_media = _mm.media_from_documents(docs)
     msig_all = ahash_signatures(all_media, n=60).select(

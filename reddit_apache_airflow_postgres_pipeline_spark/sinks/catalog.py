@@ -33,18 +33,15 @@ from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as 
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     counting_state as _cs,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.gate_core import (
+    FORMATS as _GATE_FORMATS,
+)
 
 CATALOG_SCHEMA = (
     "name string, category string, kind string, modality string, "
     "params string, n_rows long, live_dirs int, tombstones long, "
     "n_admitted long, n_rejected long"
 )
-
-_GATE_MODALITY = {
-    "dedup-gate/v1": "text",
-    "verified-dedup-gate/v1": "text",
-    "media-gate/v1": "media",
-}
 
 # the drains stamp their out_dir with this marker
 # (counting_state.stamp_corpus_meta), so the admitted corpus — the
@@ -160,13 +157,13 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
                 "n_admitted": None,
                 "n_rejected": None,
             }
-        if fmt in _GATE_MODALITY:
+        if fmt in _GATE_FORMATS:
             rows = spark.read.parquet(path).count() if _batch_dirs(path) else 0
             return {
                 "name": name,
                 "category": "gate-state",
                 "kind": fmt,
-                "modality": _GATE_MODALITY[fmt],
+                "modality": _GATE_FORMATS[fmt].modality,
                 "params": _params_json(meta),
                 "n_rows": rows,
                 "live_dirs": len(_batch_dirs(path)),

@@ -81,17 +81,11 @@ from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
     vector_index as _vi,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-    dedup_gate as _dg,
+    counting_state as _cs,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-    media_gate as _mg,
+    gate_core as _gc,
 )
-
-_GATE_LOADERS = {
-    "dedup-gate/v1": lambda sp, sd: _dg._load_state(sp, sd),
-    "verified-dedup-gate/v1": None,  # needs num_hashes from the meta
-    "media-gate/v1": lambda sp, sd: _mg._load_media_state(sp, sd),
-}
 
 _INDEX_READERS = {
     "ivf": lambda sp, p: _vi.read_postings(sp, p),
@@ -121,24 +115,17 @@ def _erase_gate_state(
     rename, subsumed dirs deleted after. Skips the fold entirely when
     no forgotten row is present (the re-sweep passes' cheap probe).
     Returns rows removed."""
-    if kind == "verified-dedup-gate/v1":
-        loader = lambda sp, sd: _dg._load_sig_state(  # noqa: E731
-            sp, sd, int(params["num_hashes"])
-        )
-    else:
-        loader = _GATE_LOADERS[kind]
-    full = loader(spark, path)
+    fmt = _gc.FORMATS[kind]
+    full = _gc.load_state(spark, path, fmt, params)
     removed = full.filter(F.col("doc").isin(ids)).count()
     if removed == 0:
         return 0
     survivors = full.filter(~F.col("doc").isin(ids))
-    all_dirs = _dg._state_subdirs(path)
-    ids_of = {d: int(os.path.basename(d).split("=", 1)[1]) for d in all_dirs}
-    next_gen = min(min(ids_of.values(), default=0), 0) - 1
+    all_dirs = _cs.state_subdirs(path)
+    next_gen = min(min(all_dirs.values(), default=0), 0) - 1
     _clean_stray_tmps(path)
     tmp = os.path.join(path, _TMP_PREFIX + "fold")
-    key = "bk" if kind == "dedup-gate/v1" else "doc"
-    survivors.distinct().repartition(key).write.mode("overwrite").parquet(tmp)
+    survivors.distinct().repartition(fmt.key).write.mode("overwrite").parquet(tmp)
     os.replace(tmp, os.path.join(path, f"batch_id={next_gen}"))
     for d in all_dirs:
         shutil.rmtree(d, ignore_errors=True)

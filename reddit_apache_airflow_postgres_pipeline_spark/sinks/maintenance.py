@@ -128,11 +128,11 @@ def _compact_for(spark: SparkSession, row, path: str) -> None:
     from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
         vector_index as _vi,
     )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        dedup_gate as _dg,
+    from reddit_apache_airflow_postgres_pipeline_spark.sinks.catalog import (
+        _read_store_meta,
     )
     from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        media_gate as _mg,
+        gate_core as _gc,
     )
 
     if row["category"] == "vector-index":
@@ -144,27 +144,11 @@ def _compact_for(spark: SparkSession, row, path: str) -> None:
             _vi.COMPACTORS[row["kind"]](spark, path, None)
         return
     if row["category"] == "gate-state":
-        if row["kind"] == "verified-dedup-gate/v1":
-            # the signature fold needs the store's frozen num_hashes —
-            # read it from the same stamped meta the loaders verify
-            # (caught by q_ops_maintenance_fixedpoint: the in-process
-            # loop test only exercised the unverified gate kind)
-            import json
-            import os
-
-            from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-                counting_state as _cs,
-            )
-
-            with open(os.path.join(path, _cs.META)) as f:
-                meta = json.load(f)
-            _dg.compact_sig_state(spark, path, int(meta["num_hashes"]))
-            return
-        folder = {
-            "dedup-gate/v1": _dg.compact_state,
-            "media-gate/v1": _mg.compact_media_state,
-        }[row["kind"]]
-        folder(spark, path)
+        # the fold needs the store's frozen geometry (e.g. num_hashes) —
+        # read it from the same stamped meta the loaders verify
+        _gc.compact_store(
+            spark, path, _gc.FORMATS[row["kind"]], _read_store_meta(path)
+        )
         return
     raise ValueError(
         f"COMPACT planned for uncompactable category {row['category']!r} "

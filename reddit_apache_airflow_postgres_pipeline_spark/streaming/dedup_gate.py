@@ -26,133 +26,45 @@ joins on skinny strings; the stream side is map work (signatures) plus
 one self-agg per batch. At 100 TB of accepted corpus, the state store
 becomes a bucketed table on ``bk`` so the per-batch semi-join prunes to
 matching buckets.
+
+The signature-VERIFIED policy below (full MinHash signatures as state,
+a banded candidate rejects only when its matching-position estimate
+clears ``threshold``) is a binding of the gate family's shared core,
+streaming/gate_core.py (format ``verified-dedup-gate/v1``), which also
+defines the family's kernel, drain and state-layout contract.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-    band_keys_of_signature,
     minhash_band_keys,
-    minhash_signature,
 )
-from reddit_apache_airflow_postgres_pipeline_spark.session import local_frame
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import gate_core as _gc
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.gate_core import (  # noqa: F401 — re-exported
+    _BK_SCHEMA,
+    _BUCKETED_MARKER,
+    _COMPACT_AFTER_DIRS,
+    _fold_state_dirs,
+    _newest_gen_id,
+    _sig_schema,
+)
 
-_BK_SCHEMA = "doc long, bk string"
-
-# Compact once the state store accumulates this many batch_id=* dirs.
-# Without compaction the store grows one directory per micro-batch
-# forever and every batch re-lists + re-opens all of them — a listing
-# cliff around 10^5 batches.
-_COMPACT_AFTER_DIRS = 16
+_state_subdirs = _cs.state_subdirs
 
 
 def _load_state(
     spark: SparkSession, state_dir: str, before_batch: int | None = None
 ) -> DataFrame:
-    """Read the accepted-band-key store. ``before_batch`` excludes state
-    written by batch ids ≥ that id: a RETRIED micro-batch must not see
-    its own failed attempt's keys (it would reject every one of its
-    docs as a duplicate of itself). Generations (negative ids) are
-    always included — they only ever fold batches that committed before
-    the current one."""
-    try:
-        df = spark.read.schema(_BK_SCHEMA + ", batch_id long").parquet(
-            state_dir
-        )
-    except AnalysisException:
-        return local_frame(spark, [], _BK_SCHEMA)
-    if before_batch is not None:
-        df = df.filter(F.col("batch_id") < before_batch)
-    return df.select("doc", "bk")
-
-
-def _state_subdirs(state_dir: str) -> list[str]:
-    if not os.path.isdir(state_dir):
-        return []
-    return [
-        os.path.join(state_dir, d)
-        for d in os.listdir(state_dir)
-        if d.startswith("batch_id=")
-        and os.path.isdir(os.path.join(state_dir, d))
-    ]
-
-
-def _fold_state_dirs(
-    spark: SparkSession,
-    state_dir: str,
-    loader,
-    partition_col: str,
-    exclude_from: int | None = None,
-    num_partitions: int | None = None,
-) -> None:
-    """THE one copy of the gate family's state fold (r11 review: three
-    near-verbatim compactors encoded this crash-safety-critical
-    sequence separately). Fold per-batch state dirs into one
-    generation dir.
-
-    Generations occupy reserved NEGATIVE batch_id partitions (real
-    micro-batch ids are checkpoint-monotonic and never negative), each
-    one lower than the last, so a generation can never collide with a
-    future batch write. The sequence is crash-safe because every gate
-    state is a SET consumed through distinct joins — duplicates never
-    change admission decisions — so it only needs superset-monotonic
-    steps:
-
-    1. read the whole store via ``loader(spark, state_dir,
-       before_batch)``, write it (distinct, hash-partitioned on
-       ``partition_col`` with normal parallelism — the fold is a full
-       shuffle across the cluster, never a single task) to a tmp dir
-       OUTSIDE the store;
-    2. rename tmp into the store as the new generation (duplicate rows
-       now exist — harmless);
-    3. delete the subsumed per-batch dirs (a crash mid-delete leaves a
-       superset — harmless, next compaction finishes the job).
-
-    Local-FS ops here (the streaming tests' hermetic path); on a real
-    deployment these become storage renames/deletes, or the state store
-    is a table format (Delta/Iceberg) whose OPTIMIZE does the same fold
-    transactionally.
-
-    ``exclude_from`` (set to the in-flight batch id by the streaming
-    caller) keeps not-yet-committed state OUT of the fold: the current
-    batch's rows must stay in their own ``batch_id=<i>`` dir so a retry
-    can still exclude them. With ``num_partitions=None`` AQE sizes the
-    shuffle by bytes (locally that may legitimately fold a tiny state
-    into one file; on a large store it yields thousands of write
-    tasks); an explicit ``num_partitions`` pins the task count.
-    Repartitioning on the store's probe key also pre-clusters it for
-    the bucketed-table layout the module docstring prescribes at scale.
-    """
-    all_dirs = _state_subdirs(state_dir)
-    ids = {
-        d: int(os.path.basename(d).split("=", 1)[1]) for d in all_dirs
-    }
-    old_dirs = [
-        d
-        for d, i in ids.items()
-        if exclude_from is None or i < exclude_from
-    ]
-    if len(old_dirs) < 2:
-        return  # nothing to fold
-    next_gen = min(min(ids.values()), 0) - 1
-    tmp = state_dir.rstrip("/") + "__compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    folded = loader(spark, state_dir, exclude_from).distinct()
-    if num_partitions is not None:
-        folded = folded.repartition(num_partitions, partition_col)
-    else:
-        folded = folded.repartition(partition_col)
-    folded.write.mode("overwrite").parquet(tmp)
-    os.replace(tmp, os.path.join(state_dir, f"batch_id={next_gen}"))
-    for d in old_dirs:
-        shutil.rmtree(d, ignore_errors=True)
+    """Read the accepted-band-key store (gate_core.load_state: a
+    retried batch must not see its own failed attempt's keys; negative
+    generation ids are always included)."""
+    return _gc.load_state(spark, state_dir, _gc.RAW, {}, before_batch)
 
 
 def compact_state(
@@ -163,8 +75,8 @@ def compact_state(
 ) -> None:
     """Fold the raw gate's (doc, bk) store — :func:`_fold_state_dirs`
     on the bucket key, the store's probe key."""
-    _fold_state_dirs(
-        spark, state_dir, _load_state, "bk", exclude_from, num_partitions
+    _gc.compact_store(
+        spark, state_dir, _gc.RAW, {}, exclude_from, num_partitions
     )
 
 
@@ -214,22 +126,11 @@ def bucket_sig_state(
     per batch, the candidate join reads only matching ``bk`` buckets
     and the signature join only matching ``doc`` buckets, neither side
     re-shuffling the store. Returns (keys_table, sigs_table)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
-        write_bucketed,
+    return _gc.bucket_store(
+        spark, _load_sig_state(spark, state_dir, num_hashes), _gc.VERIFIED,
+        {"num_hashes": num_hashes, "bands": bands}, table_prefix, path,
+        num_buckets,
     )
-
-    sigs = _load_sig_state(spark, state_dir, num_hashes)
-    write_bucketed(
-        sigs, f"{table_prefix}_sigs", ["doc"], num_buckets,
-        os.path.join(path, "sigs"), sort_cols=["doc"],
-    )
-    sigs_t = spark.table(f"{table_prefix}_sigs")
-    write_bucketed(
-        band_keys_of_signature(sigs_t, num_hashes, bands),
-        f"{table_prefix}_keys", ["bk"], num_buckets,
-        os.path.join(path, "keys"), sort_cols=["bk"],
-    )
-    return spark.table(f"{table_prefix}_keys"), sigs_t
 
 
 # -- hybrid bucketed + flat state for the VERIFIED drain ----------------------
@@ -242,17 +143,6 @@ def bucket_sig_state(
 # mirror — a stale or missing marker falls back to the flat read, so
 # the hybrid path can change performance but never admissions.
 
-_BUCKETED_MARKER = "_bucketed_gen.json"
-
-
-def _newest_gen_id(state_dir: str) -> int | None:
-    gens = [
-        int(os.path.basename(d).split("=", 1)[1])
-        for d in _state_subdirs(state_dir)
-        if os.path.basename(d).startswith("batch_id=-")
-    ]
-    return min(gens) if gens else None
-
 
 def refresh_bucketed_sig_state(
     spark: SparkSession,
@@ -264,39 +154,13 @@ def refresh_bucketed_sig_state(
     num_buckets: int = 8,
 ) -> None:
     """Rebuild the verified gate's bucketed tables from the CURRENT
-    generation dirs only (the folded history — per-batch tail dirs stay
-    flat) and stamp the marker with the generation id they mirror. A
-    no-op when the store has no generation yet."""
-    import json as _json
-
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
-        write_bucketed,
+    generation dirs only and stamp the marker with the generation id
+    they mirror (gate_core.refresh_bucketed_store). A no-op when the
+    store has no generation yet."""
+    _gc.refresh_bucketed_store(
+        spark, state_dir, _gc.VERIFIED, {"num_hashes": num_hashes, "bands": bands},
+        table_prefix, path, num_buckets,
     )
-
-    gen = _newest_gen_id(state_dir)
-    if gen is None:
-        return
-    sigs = (
-        spark.read.schema(_sig_schema(num_hashes) + ", batch_id long")
-        .parquet(state_dir)
-        .filter(F.col("batch_id") < 0)
-        .drop("batch_id")
-    )
-    write_bucketed(
-        sigs, f"{table_prefix}_sigs", ["doc"], num_buckets,
-        os.path.join(path, "sigs"), sort_cols=["doc"],
-    )
-    write_bucketed(
-        band_keys_of_signature(
-            spark.table(f"{table_prefix}_sigs"), num_hashes, bands
-        ),
-        f"{table_prefix}_keys", ["bk"], num_buckets,
-        os.path.join(path, "keys"), sort_cols=["bk"],
-    )
-    tmp = os.path.join(path, _BUCKETED_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        _json.dump({"gen": gen}, f)
-    os.replace(tmp, os.path.join(path, _BUCKETED_MARKER))
 
 
 def _load_sig_state_hybrid(
@@ -308,37 +172,13 @@ def _load_sig_state_hybrid(
     path: str,
     before_batch: int | None,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """(state_sigs, state_keys) for one gate batch: bucketed tables for
-    the folded generation + flat reads for the per-batch tail, IF the
-    marker proves the tables mirror the store's current generation;
-    otherwise the plain flat load (state_keys None → the kernel
-    derives them). The fallback means a crash between fold and refresh
-    degrades to the flat plan, never to a wrong admission."""
-    import json as _json
-
-    marker = os.path.join(path, _BUCKETED_MARKER)
-    gen = _newest_gen_id(state_dir)
-    if gen is None or not os.path.exists(marker):
-        return _load_sig_state(spark, state_dir, num_hashes, before_batch), None
-    with open(marker) as f:
-        mirrored = _json.load(f).get("gen")
-    if mirrored != gen:
-        return _load_sig_state(spark, state_dir, num_hashes, before_batch), None
-    tail = (
-        spark.read.schema(_sig_schema(num_hashes) + ", batch_id long")
-        .parquet(state_dir)
-        .filter(F.col("batch_id") >= 0)
+    """(state_sigs, state_keys) for one verified gate batch —
+    gate_core.load_store_hybrid: bucketed generation + flat tail when
+    the marker matches, else the flat load with state_keys None."""
+    return _gc.load_store_hybrid(
+        spark, state_dir, _gc.VERIFIED, {"num_hashes": num_hashes, "bands": bands},
+        table_prefix, path, before_batch,
     )
-    if before_batch is not None:
-        tail = tail.filter(F.col("batch_id") < before_batch)
-    tail = tail.drop("batch_id")
-    sigs_t = spark.table(f"{table_prefix}_sigs")
-    keys_t = spark.table(f"{table_prefix}_keys")
-    state_sigs = sigs_t.unionByName(tail)
-    state_keys = keys_t.unionByName(
-        band_keys_of_signature(tail, num_hashes, bands)
-    )
-    return state_sigs, state_keys
 
 
 def gate_batch(
@@ -476,12 +316,7 @@ def run_gate_available_now(
 
     _cs.stamp_meta(
         state_dir,
-        {
-            "format": "dedup-gate/v1",
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-        },
+        _gc.RAW.meta({"n": n, "num_hashes": num_hashes, "bands": bands}),
     )
     _cs.stamp_corpus_meta(out_dir, id_col, "text")
     stream = (
@@ -555,11 +390,8 @@ def run_gate_available_now(
 # fraction IS the unbiased MinHash estimate of Jaccard. The verified gate
 # stores full signatures instead of bare bucket keys and rejects only
 # when a band-bucket candidate's estimate clears ``threshold``:
-# bucket collision proposes, signature agreement disposes.
-
-
-def _sig_schema(num_hashes: int) -> str:
-    return "doc long, " + ", ".join(f"mh_{i} string" for i in range(num_hashes))
+# bucket collision proposes, signature agreement disposes. Every
+# function below binds streaming/gate_core.py to gate_core.VERIFIED.
 
 
 def _load_sig_state(
@@ -568,44 +400,11 @@ def _load_sig_state(
     num_hashes: int,
     before_batch: int | None = None,
 ) -> DataFrame:
-    """Read the accepted-signature store (same retry-exclusion contract
-    as :func:`_load_state`: a retried batch must not see its own failed
-    attempt's rows; negative generation ids are always included)."""
-    try:
-        df = spark.read.schema(
-            _sig_schema(num_hashes) + ", batch_id long"
-        ).parquet(state_dir)
-    except AnalysisException:
-        return local_frame(spark, [], _sig_schema(num_hashes))
-    if before_batch is not None:
-        df = df.filter(F.col("batch_id") < before_batch)
-    return df.drop("batch_id")
-
-
-def _est_rejections(
-    keys: DataFrame,
-    sig: DataFrame,
-    other_keys: DataFrame,
-    other_sig: DataFrame,
-    num_hashes: int,
-    threshold: float,
-    ordered: bool,
-) -> DataFrame:
-    """Docs from (keys, sig) rejected against (other_keys, other_sig):
-    band-bucket join proposes candidate pairs, matching-position count
-    over the k-column signatures disposes. ``ordered=True`` applies the
-    within-batch first-wins tiebreak (only a SMALLER doc id can reject);
-    cross-state the direction is already fixed by arrival time.
-
-    One skinny equi-join on bk + one distinct + two signature joins —
-    all output-proportional; signatures are k×8-hex strings, so the
-    estimate never touches text."""
-    return (
-        _est_blockers(
-            keys, sig, other_keys, other_sig, num_hashes, threshold, ordered
-        )
-        .select("doc")
-        .distinct()
+    """Read the accepted-signature store (gate_core.load_state: a
+    retried batch must not see its own failed attempt's rows; negative
+    generation ids are always included)."""
+    return _gc.load_state(
+        spark, state_dir, _gc.VERIFIED, {"num_hashes": num_hashes}, before_batch
     )
 
 
@@ -619,10 +418,11 @@ def _est_blockers(
     ordered: bool,
     broadcast_batch: bool = False,
 ) -> DataFrame:
-    """(doc, odoc, est): every above-threshold blocking pair — the
-    attribution relation behind :func:`_est_rejections` (which keeps
-    only the rejected doc set). Exposed separately so the replay
-    queries can answer WHY a doc was rejected, not just that it was.
+    """(doc, odoc, est): every above-threshold blocking pair of
+    (keys, sig) against (other_keys, other_sig) — gate_core.pair_blockers
+    on MinHash signatures, the estimate being the matching-position
+    fraction of the k columns. Exposed so the replay queries can answer
+    WHY a doc was rejected, not just that it was.
 
     The cross-state direction (``ordered=False``) keeps the self-pair
     ``odoc == doc``: a batch doc whose id ALREADY exists in the accepted
@@ -633,58 +433,11 @@ def _est_blockers(
     store, diverging from the raw bucket gate (whose bk semi-join
     rejects it). A same-id doc whose content DIFFERS below threshold is
     admitted as new — id uniqueness upstream is the caller's contract,
-    identical for both gate policies.
-
-    ``broadcast_batch`` flips BOTH state-side joins for the big-state
-    regime (meaningful only for the cross-state direction, where
-    ``other_*`` is the accepted history): the batch's band keys
-    broadcast into the candidate join and the batch-sized
-    candidates-with-signatures relation broadcasts into the
-    verification join, so the state's keys AND signatures are each
-    SCANNED through a map-side hash join — never shuffled. Identical
-    pairs — the same equi-joins evaluated from the other side; composes
-    with the bucketed state tables (a bucketed scan feeding a broadcast
-    probe is scan-pruned AND shuffle-free)."""
-    okeys = other_keys.select(F.col("doc").alias("odoc"), "bk")
-    if broadcast_batch:
-        cand = okeys.join(
-            F.broadcast(keys.select("doc", "bk")), "bk"
-        ).select("doc", "odoc")
-    else:
-        cand = keys.join(okeys, "bk").select("doc", "odoc")
-    if ordered:
-        cand = cand.filter(F.col("odoc") < F.col("doc"))
-    cand = cand.distinct()
-    # k-wide projections and the k-term match sum are built as
-    # JVM-parsed SQL strings: this function runs at plan-BUILD time
-    # once per micro-batch in the drains (and 3-6x per replay
-    # construction), and the Column-API form cost ~100 py4j round
-    # trips per call (guide §5 — driver work). Parsed trees identical:
-    # `mh_i AS __ai` == col().alias(), `CAST((a = b) AS INT)` ==
-    # (col == col).cast("int"), and the int sum / double literal
-    # division is unchanged.
-    sa = sig.selectExpr(
-        "doc", *[f"mh_{i} AS __a{i}" for i in range(num_hashes)]
-    )
-    sb = other_sig.selectExpr(
-        "doc AS odoc",
-        *[f"mh_{i} AS __b{i}" for i in range(num_hashes)],
-    )
-    est_sql = (
-        "("
-        + " + ".join(
-            f"CAST((__a{i} = __b{i}) AS INT)" for i in range(num_hashes)
-        )
-        + f") / CAST({float(num_hashes)!r} AS DOUBLE)"
-    )
-    probe = cand.join(sa, "doc")
-    if broadcast_batch:
-        joined = sb.join(F.broadcast(probe), "odoc")
-    else:
-        joined = probe.join(sb, "odoc")
-    return (
-        joined.selectExpr("doc", "odoc", f"{est_sql} AS est")
-        .filter(F.col("est") >= F.lit(float(threshold)))
+    identical for both gate policies. ``broadcast_batch`` flips both
+    state-side joins (see gate_core.pair_blockers)."""
+    return _gc.pair_blockers(
+        _gc.VERIFIED, {"num_hashes": num_hashes, "threshold": threshold},
+        keys, sig, other_keys, other_sig, ordered, broadcast_batch,
     )
 
 
@@ -718,12 +471,12 @@ def gate_batch_verified(
     from one corpus (plans/registry_ml.q_neardup_gate_replay) scans and
     aggregates it once instead of once per batch; it must equal
     ``minhash_signature(batch_df, ...)`` under the same geometry — the
-    candidate/estimate/rejection policy stays defined HERE either
-    way. ``min_quality`` prepends the curation quality floor exactly as
-    in :func:`gate_batch` (a below-floor doc claims no buckets, so a
-    later higher-quality near-copy can still be admitted); it composes
-    with ``sig`` by filtering the precomputed relation to the surviving
-    docs."""
+    candidate/estimate/rejection policy stays defined in the core
+    either way. ``min_quality`` prepends the curation quality floor
+    exactly as in :func:`gate_batch` (a below-floor doc claims no
+    buckets, so a later higher-quality near-copy can still be
+    admitted); it composes with ``sig`` by filtering the precomputed
+    relation to the surviving docs."""
     acc, sigs, dec, _ = gate_batch_verified_attributed(
         batch_df, state_sigs, id_col, text_col, n, num_hashes, bands,
         threshold, sig=sig, min_quality=min_quality,
@@ -775,46 +528,13 @@ def gate_batch_verified_attributed(
     and the signature store streams through map-side hash joins (see
     :func:`_est_blockers`); identical admissions, plan-asserted in
     tests/test_dedup_gate.py."""
-    if min_quality is not None:
-        from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import (
-            quality_score,
-        )
-
-        batch_df = batch_df.filter(
-            quality_score(text_col) >= F.lit(float(min_quality))
-        )
-        if sig is not None:
-            sig = sig.join(
-                batch_df.select(F.col(id_col).alias("doc")), "doc", "left_semi"
-            )
-    if sig is None:
-        sig = minhash_signature(batch_df, id_col, text_col, n, num_hashes)
-    keys = band_keys_of_signature(sig, num_hashes, bands)
-    skeys = (
-        state_keys
-        if state_keys is not None
-        else band_keys_of_signature(state_sigs, num_hashes, bands)
+    geometry = dict(n=n, num_hashes=num_hashes, bands=bands, threshold=threshold)
+    acc, (sigs,), dec, blk = _gc.gate_attributed(
+        batch_df, [(_gc.VERIFIED, geometry, state_sigs, sig, state_keys)],
+        id_col, text_col, floor=_gc.VERIFIED.floor_on(min_quality, text_col),
+        checkpoint_blockers=checkpoint_blockers, broadcast_batch=broadcast_batch,
     )
-    blockers = _est_blockers(
-        keys, sig, skeys, state_sigs, num_hashes, threshold, ordered=False,
-        broadcast_batch=broadcast_batch,
-    ).unionAll(
-        _est_blockers(keys, sig, keys, sig, num_hashes, threshold, ordered=True)
-    )
-    if checkpoint_blockers:
-        blockers = blockers.localCheckpoint()
-    rejected = blockers.select("doc").distinct()
-    accepted = batch_df.join(
-        rejected.withColumnRenamed("doc", id_col), id_col, "left_anti"
-    )
-    accepted_sigs = sig.join(rejected, "doc", "left_anti")
-    decisions = batch_df.select(F.col(id_col).alias("doc")).join(
-        rejected.withColumn("__rej", F.lit(True)), "doc", "left"
-    ).select("doc", F.coalesce(F.col("__rej"), F.lit(False)).alias("rejected"))
-    decisions = decisions.select(
-        "doc", (~F.col("rejected")).alias("admitted")
-    )
-    return accepted, accepted_sigs, decisions, blockers
+    return acc, sigs, dec, blk
 
 
 def run_verified_gate_available_now(
@@ -838,11 +558,12 @@ def run_verified_gate_available_now(
     broadcast_batch: bool = False,
 ) -> None:
     """Drain ``input_dir`` through the VERIFIED gate with an availableNow
-    trigger — same exactly-once layout as :func:`run_gate_available_now`
-    (accepted rows under ``out_dir/batch_id=<i>``, state under
-    ``state_dir/batch_id=<i>``, per-batch overwrite, checkpointed input),
-    but the state rows are full signatures and admission requires the
-    estimate to clear ``threshold``.
+    trigger (gate_core.run_gate_drain) — same exactly-once layout as
+    :func:`run_gate_available_now` (accepted rows under
+    ``out_dir/batch_id=<i>``, state under ``state_dir/batch_id=<i>``,
+    per-batch overwrite, checkpointed input), but the state rows are
+    full signatures and admission requires the estimate to clear
+    ``threshold``.
 
     ``bucketed`` — ``{"table_prefix": str, "path": str, "num_buckets":
     int}`` — arms the hybrid state layout: every batch probes the
@@ -869,83 +590,14 @@ def run_verified_gate_available_now(
     drain cannot drift the policy. Compaction folds per-batch dirs into
     a negative-id generation exactly like the raw gate (the state is a
     SET of signature rows; duplicates never change a decision)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        counting_state as _cs,
+    geometry = dict(n=n, num_hashes=num_hashes, bands=bands, threshold=threshold)
+    _gc.run_gate_drain(
+        spark, input_dir, schema, out_dir, checkpoint_dir,
+        [(_gc.VERIFIED, geometry, state_dir)], id_col, text_col, compact_after_dirs,
+        floor=_gc.VERIFIED.floor_on(min_quality, text_col),
+        decisions_dir=decisions_dir, dup_of_dir=dup_of_dir,
+        bucketed=bucketed, broadcast_batch=broadcast_batch,
     )
-
-    _cs.stamp_meta(
-        state_dir,
-        {
-            "format": "verified-dedup-gate/v1",
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "threshold": threshold,
-        },
-    )
-    _cs.stamp_corpus_meta(out_dir, id_col, "text")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        if bucketed is None:
-            state = _load_sig_state(
-                sp, state_dir, num_hashes, before_batch=batch_id
-            )
-            skeys = None
-        else:
-            state, skeys = _load_sig_state_hybrid(
-                sp, state_dir, num_hashes, bands,
-                bucketed["table_prefix"], bucketed["path"],
-                before_batch=batch_id,
-            )
-        accepted, accepted_sigs, decisions, blockers = (
-            gate_batch_verified_attributed(
-                batch_df, state, id_col, text_col, n, num_hashes, bands,
-                threshold, min_quality=min_quality,
-                checkpoint_blockers=dup_of_dir is not None,
-                state_keys=skeys, broadcast_batch=broadcast_batch,
-            )
-        )
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        accepted_sigs.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={batch_id}")
-        )
-        if decisions_dir is not None:
-            decisions.write.mode("overwrite").parquet(
-                os.path.join(decisions_dir, f"batch_id={batch_id}")
-            )
-        if dup_of_dir is not None:
-            blockers.write.mode("overwrite").parquet(
-                os.path.join(dup_of_dir, f"batch_id={batch_id}")
-            )
-        if len(_state_subdirs(state_dir)) > compact_after_dirs:
-            compact_sig_state(
-                batch_df.sparkSession,
-                state_dir,
-                num_hashes,
-                exclude_from=batch_id,
-            )
-            if bucketed is not None:
-                refresh_bucketed_sig_state(
-                    sp, state_dir, num_hashes, bands,
-                    bucketed["table_prefix"], bucketed["path"],
-                    bucketed.get("num_buckets", 8),
-                )
-
-    q = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def compact_sig_state(
@@ -958,13 +610,9 @@ def compact_sig_state(
     """Fold the verified gate's signature store —
     :func:`_fold_state_dirs` on ``doc``, the join key every gate batch
     probes."""
-    _fold_state_dirs(
-        spark,
-        state_dir,
-        lambda sp, sd, bb: _load_sig_state(sp, sd, num_hashes, bb),
-        "doc",
-        exclude_from,
-        num_partitions,
+    _gc.compact_store(
+        spark, state_dir, _gc.VERIFIED, {"num_hashes": num_hashes},
+        exclude_from, num_partitions,
     )
 
 

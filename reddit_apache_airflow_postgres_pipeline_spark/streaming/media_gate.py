@@ -1,67 +1,45 @@
 """Streaming MEDIA near-duplicate admission gate: aHash pigeonhole
 banding of a binary-payload stream against the already-accepted corpus.
 
-The dedup gate family's third member — exact content keys
-(dedup_gate.gate_batch's MinHash buckets on text), estimate-verified
-signatures (gate_batch_verified), and now perceptual signatures for the
-media modality: each arriving image/audio/video payload is aHashed
-(operators/multimodal.ahash_signatures — first ``bits`` decoded samples
-mean-thresholded into one packed long, through the real Arrow-batched
-codec stage) and REJECTED iff a banded candidate from the accepted
-state, or a smaller id inside its own batch (pessimistic-on-chains, the
-family rule), sits within ``max_hamming`` bits.
+A binding of the gate family's shared core (streaming/gate_core.py,
+format ``media-gate/v1``), which defines the family contract — the
+pessimistic first-wins rule, blocker attribution, retry exclusion,
+exactly-once drain layout, compaction and the bucketed/hybrid state
+layout. What is media-specific:
 
-Candidate generation is the pigeonhole machinery every bit-signature
-path shares (neardup.signature_band_keys: distance ≤ d ⇒ one of d+1
-bands equal — LOSSLESS, so the relational replay's direct quadratic
-filter defines the identical pair set), and verification is one
-``bit_count(xor)`` on packed longs — never a payload comparison, never
-a cross join. State is one long per accepted media item: at 100 TB of
-accepted media the store is ~8 bytes/item of signatures, the property
-that makes incremental media dedup against ALL history feasible.
+- the signer: each payload is aHashed (operators/multimodal.
+  ahash_signatures — the first ``bits`` decoded samples
+  mean-thresholded into one packed long, through the Arrow-batched
+  codec stage), keyed by ``id_col``;
+- candidates: pigeonhole bands (neardup.signature_band_keys: distance
+  ≤ d ⇒ one of d+1 bands equal — LOSSLESS, so the relational replay's
+  direct quadratic filter defines the identical pair set);
+- verification: one ``bit_count(xor)`` ≤ ``max_hamming`` on packed
+  longs — never a payload comparison;
+- the quality floor: payload size (``min_bytes``);
+- state is one long per accepted item (~8 bytes/item at 100 TB of
+  media), which is what makes dedup against ALL history feasible.
+
 Batch replay oracle-paired as plans/registry_mm.q_media_gate_replay.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
-from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import ahash_signatures
-from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-    signature_band_keys,
-)
-from reddit_apache_airflow_postgres_pipeline_spark.session import local_frame
-from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
-from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
-    _BUCKETED_MARKER,
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import gate_core as _gc
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.gate_core import (  # noqa: F401 — re-exported
     _COMPACT_AFTER_DIRS,
-    _fold_state_dirs,
-    _newest_gen_id,
-    _state_subdirs,
+    _SIG_SCHEMA,
 )
-
-_SIG_SCHEMA = "doc long, sig long"
 
 
 def _load_media_state(
     spark: SparkSession, state_dir: str, before_batch: int | None = None
 ) -> DataFrame:
-    """Read the accepted-signature store (the family's retry-exclusion
-    contract: a retried batch must not see its own failed attempt's
-    rows; negative generation ids always included)."""
-    try:
-        df = spark.read.schema(_SIG_SCHEMA + ", batch_id long").parquet(
-            state_dir
-        )
-    except AnalysisException:
-        return local_frame(spark, [], _SIG_SCHEMA)
-    if before_batch is not None:
-        df = df.filter(F.col("batch_id") < before_batch)
-    return df.select("doc", "sig")
+    """Read the accepted-signature store (gate_core.load_state, with the
+    family's retry exclusion)."""
+    return _gc.load_state(spark, state_dir, _gc.MEDIA, {}, before_batch)
 
 
 def _ham_blockers(
@@ -73,64 +51,13 @@ def _ham_blockers(
     ordered: bool,
     broadcast_batch: bool = False,
 ) -> DataFrame:
-    """(doc, odoc, dist): every within-distance blocking pair — the
-    media analog of dedup_gate._est_blockers, exposed so rejection
-    attribution (WHY was this item dropped) is a relation, not a
-    re-derivation. Banded buckets propose, ``bit_count(xor)`` ≤
-    max_hamming disposes. ``ordered=True`` applies the within-batch
-    smaller-id rule; the cross-state direction keeps the self-pair
-    ``odoc == doc`` so a re-delivered already-accepted media_id is
-    blocked by its own prior signature (the family contract —
-    dedup_gate._est_blockers documents the failure mode).
-
-    ``broadcast_batch`` flips both state-side joins for the big-state
-    regime exactly as dedup_gate._est_blockers does: the batch's band
-    keys broadcast into the candidate join, the batch-sized
-    candidates-with-signatures relation broadcasts into the Hamming
-    verification join, and the accepted-media store is SCANNED through
-    map-side hash joins — never shuffled."""
-    okeys = other_keys.select(F.col("doc").alias("odoc"), "bk")
-    if broadcast_batch:
-        cand = okeys.join(
-            F.broadcast(keys.select("doc", "bk")), "bk"
-        ).select("doc", "odoc")
-    else:
-        cand = keys.join(okeys, "bk").select("doc", "odoc")
-    if ordered:
-        cand = cand.filter(F.col("odoc") < F.col("doc"))
-    cand = cand.distinct()
-    sa = sig.select("doc", F.col("sig").alias("__sa"))
-    sb = other_sig.select(F.col("doc").alias("odoc"), F.col("sig").alias("__sb"))
-    probe = cand.join(sa, "doc")
-    joined = (
-        sb.join(F.broadcast(probe), "odoc")
-        if broadcast_batch
-        else probe.join(sb, "odoc")
-    )
-    return (
-        joined.select(
-            "doc",
-            "odoc",
-            F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))).alias("dist"),
-        )
-        .filter(F.col("dist") <= F.lit(max_hamming))
-    )
-
-
-def _ham_rejections(
-    keys: DataFrame,
-    sig: DataFrame,
-    other_keys: DataFrame,
-    other_sig: DataFrame,
-    max_hamming: int,
-    ordered: bool,
-) -> DataFrame:
-    """Docs from (keys, sig) rejected against (other_keys, other_sig) —
-    the rejected-doc projection of :func:`_ham_blockers`."""
-    return (
-        _ham_blockers(keys, sig, other_keys, other_sig, max_hamming, ordered)
-        .select("doc")
-        .distinct()
+    """(doc, odoc, dist): every within-distance blocking pair —
+    gate_core.pair_blockers on aHash signatures (banded buckets
+    propose, ``bit_count(xor)`` ≤ max_hamming disposes), so rejection
+    attribution is a relation, not a re-derivation."""
+    return _gc.pair_blockers(
+        _gc.MEDIA, {"max_hamming": max_hamming}, keys, sig, other_keys,
+        other_sig, ordered, broadcast_batch,
     )
 
 
@@ -151,17 +78,14 @@ def gate_media_batch(
 
     Returns (accepted_rows, accepted_sigs, decisions). ``sig``
     optionally supplies the batch's precomputed (doc, sig) relation
-    (the replay contract shared with the text kernels); the policy
-    stays defined here either way. Every media row has a signature
-    (zero-length payloads hash to sig 0 and therefore dedup against
-    each other — the first empty payload wins, the rest are rejected
-    as its duplicates). ``min_bytes`` is the media quality floor (the
-    text kernels' min_quality analog on the modality's cheapest
-    health signal, payload size): a below-floor item is dropped BEFORE
-    signatures exist, claims no buckets, and a later full-size
-    near-copy can still be admitted. ``broadcast_batch`` flips the
-    cross-state probes for the big-state regime (see
-    :func:`_ham_blockers`); identical admissions by construction."""
+    (the replay contract shared with the text kernels). Every media row
+    has a signature (zero-length payloads hash to sig 0 and therefore
+    dedup against each other — the first empty payload wins, the rest
+    are rejected as its duplicates). ``min_bytes`` is the media quality
+    floor: a below-floor item is dropped BEFORE signatures exist,
+    claims no buckets, and a later full-size near-copy can still be
+    admitted. ``broadcast_batch`` flips the cross-state probes for the
+    big-state regime; identical admissions by construction."""
     acc, sigs, dec, _ = gate_media_batch_attributed(
         batch_df, state_sigs, id_col, bits, max_hamming, sig=sig,
         min_bytes=min_bytes, broadcast_batch=broadcast_batch,
@@ -182,56 +106,19 @@ def gate_media_batch_attributed(
     broadcast_batch: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """:func:`gate_media_batch` plus the BLOCKER relation (doc, odoc,
-    dist): every within-distance pair eligible to reject ``doc`` —
-    the media analog of dedup_gate.gate_batch_verified_attributed, so
-    rejection attribution ("which accepted item is my upload a
-    duplicate of") is persisted by the drain and readable without a
-    replay. ``checkpoint_blockers=True`` localCheckpoints the relation
-    before the other three derive from it (one candidate-join pass for
-    a four-sink caller).
-
-    ``state_keys`` optionally supplies the state's PRECOMPUTED band-key
-    relation (doc, bk) — e.g. :func:`bucket_media_state`'s bucketed
-    table, so the candidate probe reads co-located ``bk`` buckets
-    instead of re-deriving and re-shuffling keys from the signature
-    store every batch; must equal ``signature_band_keys(state_sigs,
-    bits, max_hamming)``. ``broadcast_batch`` flips the cross-state
-    probes for the big-state regime (see :func:`_ham_blockers`)."""
-    if min_bytes is not None:
-        batch_df = batch_df.filter(
-            F.length(F.col("payload")) >= F.lit(int(min_bytes))
-        )
-        if sig is not None:
-            sig = sig.join(
-                batch_df.select(F.col(id_col).alias("doc")), "doc", "left_semi"
-            )
-    if sig is None:
-        sig = ahash_signatures(batch_df, n=bits).select(
-            F.col("media_id").alias("doc"), "sig"
-        )
-    keys = signature_band_keys(sig, bits, max_hamming)
-    skeys = (
-        state_keys
-        if state_keys is not None
-        else signature_band_keys(state_sigs, bits, max_hamming)
+    dist): every within-distance pair eligible to reject ``doc``, so
+    "which accepted item is my upload a duplicate of" is persisted by
+    the drain and readable without a replay. ``checkpoint_blockers``
+    and ``state_keys`` (e.g. :func:`bucket_media_state`'s bucketed
+    table; must equal ``signature_band_keys(state_sigs, bits,
+    max_hamming)``) follow gate_core.gate_attributed."""
+    geometry = dict(bits=bits, max_hamming=max_hamming)
+    acc, (sigs,), dec, blk = _gc.gate_attributed(
+        batch_df, [(_gc.MEDIA, geometry, state_sigs, sig, state_keys)], id_col,
+        floor=_gc.MEDIA.floor_on(min_bytes),
+        checkpoint_blockers=checkpoint_blockers, broadcast_batch=broadcast_batch,
     )
-    blockers = _ham_blockers(
-        keys, sig, skeys, state_sigs, max_hamming, ordered=False,
-        broadcast_batch=broadcast_batch,
-    ).unionAll(_ham_blockers(keys, sig, keys, sig, max_hamming, ordered=True))
-    if checkpoint_blockers:
-        blockers = blockers.localCheckpoint()
-    rejected = blockers.select("doc").distinct()
-    accepted = batch_df.join(
-        rejected.withColumnRenamed("doc", id_col), id_col, "left_anti"
-    )
-    accepted_sigs = sig.join(rejected, "doc", "left_anti")
-    decisions = batch_df.select(F.col(id_col).alias("doc")).join(
-        rejected.withColumn("__rej", F.lit(True)), "doc", "left"
-    ).select(
-        "doc", (~F.coalesce(F.col("__rej"), F.lit(False))).alias("admitted")
-    )
-    return accepted, accepted_sigs, decisions, blockers
+    return acc, sigs, dec, blk
 
 
 def run_media_gate_available_now(
@@ -252,88 +139,20 @@ def run_media_gate_available_now(
     broadcast_batch: bool = False,
 ) -> None:
     """Drain ``input_dir`` (parquet files of media rows) through the
-    media gate with an availableNow trigger — the family's exactly-once
-    layout (accepted rows under ``out_dir/batch_id=<i>``, signatures
-    under ``state_dir/batch_id=<i>``, per-batch overwrite, checkpointed
-    input). Geometry (bits, max_hamming) is stamped into the state meta
-    on first run and verified on every later one — a redeployed drain
-    cannot silently re-band the state. ``decisions_dir`` arms the
-    monitoring log (the family contract): every batch's full
-    (doc, admitted) relation lands under ``decisions_dir/batch_id=<i>``
-    with the same exactly-once per-dir overwrite; ``dup_of_dir``
-    likewise persists the blocker relation (doc, odoc, dist) so "what
-    is my upload a duplicate of" reads from the log, never replays.
-
-    ``bucketed`` — ``{"table_prefix": str, "path": str, "num_buckets":
-    int}`` — arms the hybrid state layout exactly as the verified text
-    drain's: the folded history is probed through bucketed tables
-    (sigs on ``doc``, derived band keys on ``bk`` — no store
-    re-shuffle) plus a flat read of only the post-fold tail dirs; each
-    compaction refreshes the tables, and a stale/missing marker falls
-    back to the flat read, so the hybrid can change the physical plan
-    but never an admission. ``broadcast_batch`` flips the cross-state
-    probes so the state streams map-side (see :func:`_ham_blockers`)."""
-    _cs.stamp_meta(
-        state_dir,
-        {"format": "media-gate/v1", "bits": bits, "max_hamming": max_hamming},
-    )
-    _cs.stamp_corpus_meta(out_dir, id_col, "media")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        if bucketed is None:
-            state = _load_media_state(sp, state_dir, before_batch=batch_id)
-            skeys = None
-        else:
-            state, skeys = _load_media_state_hybrid(
-                sp, state_dir, bits, max_hamming,
-                bucketed["table_prefix"], bucketed["path"],
-                before_batch=batch_id,
-            )
-        accepted, accepted_sigs, decisions, blockers = (
-            gate_media_batch_attributed(
-                batch_df, state, id_col, bits, max_hamming,
-                checkpoint_blockers=dup_of_dir is not None,
-                min_bytes=min_bytes, state_keys=skeys,
-                broadcast_batch=broadcast_batch,
-            )
-        )
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        accepted_sigs.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={batch_id}")
-        )
-        if decisions_dir is not None:
-            decisions.write.mode("overwrite").parquet(
-                os.path.join(decisions_dir, f"batch_id={batch_id}")
-            )
-        if dup_of_dir is not None:
-            blockers.write.mode("overwrite").parquet(
-                os.path.join(dup_of_dir, f"batch_id={batch_id}")
-            )
-        if len(_state_subdirs(state_dir)) > compact_after_dirs:
-            compact_media_state(
-                batch_df.sparkSession, state_dir, exclude_from=batch_id
-            )
-            if bucketed is not None:
-                refresh_bucketed_media_state(
-                    sp, state_dir, bits, max_hamming,
-                    bucketed["table_prefix"], bucketed["path"],
-                    bucketed.get("num_buckets", 8),
-                )
-
-    (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    media gate with an availableNow trigger — gate_core.run_gate_drain:
+    accepted rows under ``out_dir/batch_id=<i>``, signatures under
+    ``state_dir/batch_id=<i>``, geometry (bits, max_hamming) stamped on
+    first run and verified on every later one. ``decisions_dir`` /
+    ``dup_of_dir`` arm the (doc, admitted) and (doc, odoc, dist) logs;
+    ``bucketed`` — ``{"table_prefix", "path", "num_buckets"}`` — arms
+    the hybrid bucketed + flat-tail state layout."""
+    _gc.run_gate_drain(
+        spark, input_dir, schema, out_dir, checkpoint_dir,
+        [(_gc.MEDIA, dict(bits=bits, max_hamming=max_hamming), state_dir)],
+        id_col, compact_after_dirs=compact_after_dirs,
+        floor=_gc.MEDIA.floor_on(min_bytes),
+        decisions_dir=decisions_dir, dup_of_dir=dup_of_dir,
+        bucketed=bucketed, broadcast_batch=broadcast_batch,
     )
 
 
@@ -343,25 +162,11 @@ def compact_media_state(
     exclude_from: int | None = None,
     num_partitions: int | None = None,
 ) -> None:
-    """Fold the media gate's (doc, sig) store —
-    dedup_gate._fold_state_dirs on ``doc``, the join key every gate
-    batch probes."""
-    _fold_state_dirs(
-        spark, state_dir, _load_media_state, "doc", exclude_from,
-        num_partitions,
+    """Fold the media gate's (doc, sig) store on ``doc``
+    (gate_core.compact_store)."""
+    _gc.compact_store(
+        spark, state_dir, _gc.MEDIA, {}, exclude_from, num_partitions
     )
-
-
-# -- bucketed + hybrid state for the MEDIA drain ------------------------------
-#
-# Same production split as the verified text gate (dedup_gate.py): the
-# folded history lives as bucketed external tables the per-batch probes
-# scan without re-shuffling — sigs on ``doc`` (the Hamming-verification
-# join's key), derived band keys on ``bk`` (the candidate semi-join's
-# key) — while only the small post-fold tail of per-batch dirs is read
-# flat. The marker/fallback protocol is shared with the text gate, so
-# the hybrid is a physical-plan choice that can never change an
-# admission.
 
 
 def bucket_media_state(
@@ -377,67 +182,10 @@ def bucket_media_state(
     tables (``<prefix>_keys`` on bk, ``<prefix>_sigs`` on doc); pass
     them to :func:`gate_media_batch_attributed` as (state_keys,
     state_sigs). Returns (keys_table, sigs_table)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
-        write_bucketed,
+    return _gc.bucket_store(
+        spark, _load_media_state(spark, state_dir), _gc.MEDIA,
+        dict(bits=bits, max_hamming=max_hamming), table_prefix, path, num_buckets,
     )
-
-    sigs = _load_media_state(spark, state_dir)
-    write_bucketed(
-        sigs, f"{table_prefix}_sigs", ["doc"], num_buckets,
-        os.path.join(path, "sigs"), sort_cols=["doc"],
-    )
-    sigs_t = spark.table(f"{table_prefix}_sigs")
-    write_bucketed(
-        signature_band_keys(sigs_t, bits, max_hamming),
-        f"{table_prefix}_keys", ["bk"], num_buckets,
-        os.path.join(path, "keys"), sort_cols=["bk"],
-    )
-    return spark.table(f"{table_prefix}_keys"), sigs_t
-
-
-def refresh_bucketed_media_state(
-    spark: SparkSession,
-    state_dir: str,
-    bits: int,
-    max_hamming: int,
-    table_prefix: str,
-    path: str,
-    num_buckets: int = 8,
-) -> None:
-    """Rebuild the media gate's bucketed tables from the CURRENT
-    generation dirs only and stamp the marker with the generation id
-    they mirror — dedup_gate.refresh_bucketed_sig_state's contract for
-    the media layout. A no-op when the store has no generation yet."""
-    import json as _json
-
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
-        write_bucketed,
-    )
-
-    gen = _newest_gen_id(state_dir)
-    if gen is None:
-        return
-    sigs = (
-        spark.read.schema(_SIG_SCHEMA + ", batch_id long")
-        .parquet(state_dir)
-        .filter(F.col("batch_id") < 0)
-        .drop("batch_id")
-    )
-    write_bucketed(
-        sigs, f"{table_prefix}_sigs", ["doc"], num_buckets,
-        os.path.join(path, "sigs"), sort_cols=["doc"],
-    )
-    write_bucketed(
-        signature_band_keys(
-            spark.table(f"{table_prefix}_sigs"), bits, max_hamming
-        ),
-        f"{table_prefix}_keys", ["bk"], num_buckets,
-        os.path.join(path, "keys"), sort_cols=["bk"],
-    )
-    tmp = os.path.join(path, _BUCKETED_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        _json.dump({"gen": gen}, f)
-    os.replace(tmp, os.path.join(path, _BUCKETED_MARKER))
 
 
 def _load_media_state_hybrid(
@@ -449,34 +197,9 @@ def _load_media_state_hybrid(
     path: str,
     before_batch: int | None,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """(state_sigs, state_keys) for one media gate batch: bucketed
-    tables for the folded generation + flat reads for the per-batch
-    tail IF the marker proves the tables mirror the store's current
-    generation; otherwise the plain flat load (state_keys None → the
-    kernel derives them). A crash between fold and refresh degrades to
-    the flat plan, never to a wrong admission."""
-    import json as _json
-
-    marker = os.path.join(path, _BUCKETED_MARKER)
-    gen = _newest_gen_id(state_dir)
-    if gen is None or not os.path.exists(marker):
-        return _load_media_state(spark, state_dir, before_batch), None
-    with open(marker) as f:
-        mirrored = _json.load(f).get("gen")
-    if mirrored != gen:
-        return _load_media_state(spark, state_dir, before_batch), None
-    tail = (
-        spark.read.schema(_SIG_SCHEMA + ", batch_id long")
-        .parquet(state_dir)
-        .filter(F.col("batch_id") >= 0)
+    """(state_sigs, state_keys) for one media gate batch —
+    gate_core.load_store_hybrid."""
+    return _gc.load_store_hybrid(
+        spark, state_dir, _gc.MEDIA, dict(bits=bits, max_hamming=max_hamming),
+        table_prefix, path, before_batch,
     )
-    if before_batch is not None:
-        tail = tail.filter(F.col("batch_id") < before_batch)
-    tail = tail.drop("batch_id")
-    sigs_t = spark.table(f"{table_prefix}_sigs")
-    keys_t = spark.table(f"{table_prefix}_keys")
-    state_sigs = sigs_t.unionByName(tail)
-    state_keys = keys_t.unionByName(
-        signature_band_keys(tail, bits, max_hamming)
-    )
-    return state_sigs, state_keys

@@ -2,60 +2,31 @@
 carry BOTH a text body and a media payload, admitted atomically against
 both modalities' accepted history.
 
-The gate family's composition point. Running the text gate and the
-media gate as separate drains on the same feed is NOT the same policy:
-a doc rejected as a media near-dup would still enter the text gate's
-accepted state (and vice versa), so later arrivals would be blocked by
-items the unified corpus never admitted. This kernel evaluates both
-modalities' blocker relations against the SAME batch and rejects iff
-EITHER fires — the accepted set (and therefore both signature states)
-is one corpus, which is exactly what a multimodal training-data ingest
-needs: an image-dup of an accepted item must not re-enter just because
-its caption was rewritten, and a text-dup must not re-enter behind a
-re-encoded payload.
+Running the text gate and the media gate as separate drains on the same
+feed is NOT the same policy: a doc rejected as a media near-dup would
+still enter the text gate's accepted state (and vice versa), so later
+arrivals would be blocked by items the unified corpus never admitted.
+This gate evaluates both modalities' blockers against the SAME batch
+and rejects iff EITHER fires — an image-dup of an accepted item must
+not re-enter because its caption was rewritten, and a text-dup must not
+re-enter behind a re-encoded payload.
 
-Mechanics are entirely the family's existing primitives — MinHash
-band-keys + matching-position verification for text
-(dedup_gate._est_blockers), aHash pigeonhole + popcount verification
-for media (media_gate._ham_blockers) — so state stays signatures-only
-(~8 B media + k×8 B text per accepted doc at 100 TB), candidates stay
-banded (never all-pairs, never a history re-read), and the two state
-stores keep their OWN on-disk formats (verified-dedup-gate/v1,
-media-gate/v1): the estate catalog, compactors, and bucketed layouts
-all apply unchanged. Batch replay oracle-paired as
-plans/registry_mm.q_multimodal_gate_replay (the shared unrolled
-generation chain over the UNION of the two candidate relations).
+It is the shared core (streaming/gate_core.py) over two formats at
+once: ``verified-dedup-gate/v1`` on ``text_state_dir`` and
+``media-gate/v1`` on ``media_state_dir``. Each store keeps its own
+stamped format, so the estate catalog, compactors and geometry guards
+apply to each unchanged; the unification is the admission decision,
+not a new state format. Batch replay oracle-paired as
+plans/registry_mm.q_multimodal_gate_replay.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import (
-    ahash_signatures,
-)
-from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-    band_keys_of_signature,
-    minhash_signature,
-    signature_band_keys,
-)
-from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-    counting_state as _cs,
-)
-from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import gate_core as _gc
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.gate_core import (
     _COMPACT_AFTER_DIRS,
-    _est_blockers,
-    _load_sig_state,
-    _state_subdirs,
-    compact_sig_state,
-)
-from reddit_apache_airflow_postgres_pipeline_spark.streaming.media_gate import (
-    _ham_blockers,
-    _load_media_state,
-    compact_media_state,
 )
 
 
@@ -90,56 +61,18 @@ def gate_multimodal_batch_attributed(
     persists. ``tsig``/``msig`` optionally supply precomputed signature
     relations (the family's replay contract); ``broadcast_batch`` flips
     BOTH modalities' cross-state probes for the big-state regime."""
-    if tsig is None:
-        tsig = minhash_signature(batch_df, id_col, text_col, n, num_hashes)
-    tkeys = band_keys_of_signature(tsig, num_hashes, bands)
-    tskeys = band_keys_of_signature(text_state_sigs, num_hashes, bands)
-    tblk = _est_blockers(
-        tkeys, tsig, tskeys, text_state_sigs, num_hashes, threshold,
-        ordered=False, broadcast_batch=broadcast_batch,
-    ).unionAll(
-        _est_blockers(
-            tkeys, tsig, tkeys, tsig, num_hashes, threshold, ordered=True
-        )
-    )
-    if msig is None:
-        msig = ahash_signatures(
-            batch_df.select(
-                F.col(id_col).alias("media_id"), "kind", "payload", "meta"
-            ),
-            n=bits,
-        ).select(F.col("media_id").alias("doc"), "sig")
-    mkeys = signature_band_keys(msig, bits, max_hamming)
-    mskeys = signature_band_keys(media_state_sigs, bits, max_hamming)
-    mblk = _ham_blockers(
-        mkeys, msig, mskeys, media_state_sigs, max_hamming, ordered=False,
+    text = dict(n=n, num_hashes=num_hashes, bands=bands, threshold=threshold)
+    media = dict(bits=bits, max_hamming=max_hamming)
+    acc, (tsigs, msigs), dec, blk = _gc.gate_attributed(
+        batch_df,
+        [
+            (_gc.VERIFIED, text, text_state_sigs, tsig, None),
+            (_gc.MEDIA, media, media_state_sigs, msig, None),
+        ],
+        id_col, text_col, checkpoint_blockers=checkpoint_blockers,
         broadcast_batch=broadcast_batch,
-    ).unionAll(
-        _ham_blockers(mkeys, msig, mkeys, msig, max_hamming, ordered=True)
     )
-    blockers = tblk.select(
-        "doc", "odoc", F.lit("text").alias("modality"),
-        F.col("est").alias("score"),
-    ).unionAll(
-        mblk.select(
-            "doc", "odoc", F.lit("media").alias("modality"),
-            F.col("dist").cast("double").alias("score"),
-        )
-    )
-    if checkpoint_blockers:
-        blockers = blockers.localCheckpoint()
-    rejected = blockers.select("doc").distinct()
-    accepted = batch_df.join(
-        rejected.withColumnRenamed("doc", id_col), id_col, "left_anti"
-    )
-    accepted_tsigs = tsig.join(rejected, "doc", "left_anti")
-    accepted_msigs = msig.join(rejected, "doc", "left_anti")
-    decisions = batch_df.select(F.col(id_col).alias("doc")).join(
-        rejected.withColumn("__rej", F.lit(True)), "doc", "left"
-    ).select(
-        "doc", (~F.coalesce(F.col("__rej"), F.lit(False))).alias("admitted")
-    )
-    return accepted, accepted_tsigs, accepted_msigs, decisions, blockers
+    return acc, tsigs, msigs, dec, blk
 
 
 def gate_multimodal_batch(
@@ -180,77 +113,17 @@ def run_multimodal_gate_available_now(
 ) -> None:
     """Drain ``input_dir`` (parquet files of multimodal document rows:
     id + text + kind/payload/meta) through the unified gate with an
-    availableNow trigger — the family's exactly-once layout. Each
-    modality's signatures land in ITS OWN state store under its own
-    stamped format (verified-dedup-gate/v1 on ``text_state_dir``,
-    media-gate/v1 on ``media_state_dir``), so the estate catalog,
-    compactors, geometry guards, and bucketed layouts apply to each
-    unchanged — the unification is the admission decision, not a new
-    state format. ``decisions_dir`` / ``dup_of_dir`` arm the family's
-    monitoring logs; the attribution rows carry the ``modality`` column
-    so "what blocked my doc" distinguishes a text dup from a media
-    dup."""
-    _cs.stamp_meta(
-        text_state_dir,
-        {
-            "format": "verified-dedup-gate/v1",
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "threshold": threshold,
-        },
-    )
-    _cs.stamp_meta(
-        media_state_dir,
-        {"format": "media-gate/v1", "bits": bits, "max_hamming": max_hamming},
-    )
-    _cs.stamp_corpus_meta(out_dir, id_col, "multimodal")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        tstate = _load_sig_state(
-            sp, text_state_dir, num_hashes, before_batch=batch_id
-        )
-        mstate = _load_media_state(sp, media_state_dir, before_batch=batch_id)
-        acc, tsigs, msigs, dec, blk = gate_multimodal_batch_attributed(
-            batch_df, tstate, mstate, id_col, text_col, n, num_hashes,
-            bands, threshold, bits, max_hamming,
-            checkpoint_blockers=dup_of_dir is not None,
-            broadcast_batch=broadcast_batch,
-        )
-        acc.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        tsigs.write.mode("overwrite").parquet(
-            os.path.join(text_state_dir, f"batch_id={batch_id}")
-        )
-        msigs.write.mode("overwrite").parquet(
-            os.path.join(media_state_dir, f"batch_id={batch_id}")
-        )
-        if decisions_dir is not None:
-            dec.write.mode("overwrite").parquet(
-                os.path.join(decisions_dir, f"batch_id={batch_id}")
-            )
-        if dup_of_dir is not None:
-            blk.write.mode("overwrite").parquet(
-                os.path.join(dup_of_dir, f"batch_id={batch_id}")
-            )
-        if len(_state_subdirs(text_state_dir)) > compact_after_dirs:
-            compact_sig_state(
-                sp, text_state_dir, num_hashes, exclude_from=batch_id
-            )
-        if len(_state_subdirs(media_state_dir)) > compact_after_dirs:
-            compact_media_state(sp, media_state_dir, exclude_from=batch_id)
-
-    (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    availableNow trigger — gate_core.run_gate_drain over the text and
+    media stores, each under its own stamped format.
+    ``decisions_dir`` / ``dup_of_dir`` arm the family's monitoring
+    logs; the attribution rows carry the ``modality`` column so "what
+    blocked my doc" distinguishes a text dup from a media dup."""
+    text = dict(n=n, num_hashes=num_hashes, bands=bands, threshold=threshold)
+    media = dict(bits=bits, max_hamming=max_hamming)
+    _gc.run_gate_drain(
+        spark, input_dir, schema, out_dir, checkpoint_dir,
+        [(_gc.VERIFIED, text, text_state_dir), (_gc.MEDIA, media, media_state_dir)],
+        id_col, text_col, compact_after_dirs,
+        decisions_dir=decisions_dir, dup_of_dir=dup_of_dir,
+        broadcast_batch=broadcast_batch,
     )

@@ -31,8 +31,10 @@ RUN_FULL_TIER = os.environ.get("SPARK_GRAFT_FULL_TESTS", "") == "1"
 # (tests/test_entry_oracle.py handles that split itself), (c) one
 # stream-vs-replay parity smoke (test_verified_gate_stream_matches_
 # batch_replay) guarding the replay-restructure surface. Names are
-# matched on file::test (parametrizations included), so a renamed test
-# silently falls back into the default tier — the safe direction.
+# matched on file::test (parametrizations included); an entry whose
+# file is collected but defines no test of that name aborts collection
+# (see stale_full_tier_entries), so a rename cannot silently move a
+# slow test into the default tier.
 FULL_TIER_TESTS = {
     "test_dedup_gate.py::test_admission_rate_drift_stream_matches_replay",
     "test_dedup_gate.py::test_bucketed_sig_state_verified_gate_parity",
@@ -111,7 +113,30 @@ FULL_TIER_TESTS = {
 }
 
 
+def stale_full_tier_entries(modules: dict[str, object]) -> list[str]:
+    """FULL_TIER_TESTS entries whose file is in ``modules`` (collected
+    file name → its module) but which name no test function there."""
+    stale = []
+    for entry in sorted(FULL_TIER_TESTS):
+        fname, name = entry.split("::", 1)
+        if fname in modules and not callable(getattr(modules[fname], name, None)):
+            stale.append(entry)
+    return stale
+
+
 def pytest_collection_modifyitems(config, items):
+    stale = stale_full_tier_entries(
+        {
+            item.path.name: item.module
+            for item in items
+            if getattr(item, "module", None) is not None
+        }
+    )
+    if stale:
+        raise pytest.UsageError(
+            "FULL_TIER_TESTS names tests that no longer exist in their "
+            f"collected files: {stale} — update the entries"
+        )
     if RUN_FULL_TIER:
         return
     skip_full = pytest.mark.skip(

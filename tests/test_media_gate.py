@@ -66,6 +66,26 @@ def test_gate_media_batch_first_wins_and_state(spark):
     assert acc2.count() == 0
 
 
+def test_gate_media_batch_signs_through_id_col(spark):
+    """A media batch keyed by another id column gates exactly like the
+    media_id-keyed one: same decisions, same accepted signatures (the
+    signer used to read ``media_id`` whatever ``id_col`` said)."""
+    media = _media(spark)
+    copies = media.filter(F.col("media_id") < 5).withColumn(
+        "media_id", F.col("media_id") + 900
+    )
+    batch = media.unionByName(copies)
+    state = spark.createDataFrame([], media_gate._SIG_SCHEMA)
+    _, sigs, dec = media_gate.gate_media_batch(batch, state)
+    acc_r, sigs_r, dec_r = media_gate.gate_media_batch(
+        batch.withColumnRenamed("media_id", "item_id"), state, id_col="item_id"
+    )
+    assert sorted(dec_r.collect()) == sorted(dec.collect())
+    assert sorted(sigs_r.collect()) == sorted(sigs.collect())
+    assert {r["doc"]: r["admitted"] for r in dec.collect()}[900] is False
+    assert "item_id" in acc_r.columns
+
+
 def test_media_gate_stream_matches_batch_replay(spark, tmp_path):
     """sf0.001 media split into 3 generation files (media_id % 3)
     drained through run_media_gate_available_now admit EXACTLY what
